@@ -203,15 +203,6 @@ def gen_katastralni_uzemi_pdf(seed: int = 42) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def truth_ku(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-    nx = GRID * KU_SUB
-    dx = (LON1 - LON0) / nx
-    dy = (LAT1 - LAT0) / nx
-    ix = np.clip(np.floor((lon - LON0) / dx).astype(np.int64), 0, nx - 1)
-    iy = np.clip(np.floor((lat - LAT0) / dy).astype(np.int64), 0, nx - 1)
-    return KU_BASE + iy * nx + ix
-
-
 def gen_parcely_pdf(seed: int = 42, per_ku: int = 4) -> pd.DataFrame:
     """Parcel layer with IntegerList-analogue array columns
     (gfs/Parcely.gfs:111-116 → ArrayType, SURVEY.md §1.3)."""

@@ -64,10 +64,7 @@ def run_batches(
                 layer = layer_row[0]
                 part = df.where(F.col(layer_col) == layer).drop(layer_col)
                 table = M.ParquetTable(spark, os.path.join(warehouse, layer))
-                tally = table.merge(part, key=key)
-                stats.tallies[(batch_id, layer)] = {
-                    r["action"]: r["n"] for r in tally.collect()
-                }
+                stats.tallies[(batch_id, layer)] = table.merge(part, key=key)
         else:
             # write/append: ONE scan fans every layer out via
             # partitionBy, then each partition directory is adopted by

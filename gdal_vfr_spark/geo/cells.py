@@ -222,21 +222,6 @@ def cell_from_indices_expr(ix, iy, res: int):
 # ---------------------------------------------------------------- Spark UDFs
 
 
-def cell_udf(res: int):
-    """pandas_udf (lon, lat) -> cell id at fixed resolution.
-
-    Arrow-batched; replaces the reference's per-feature cursor loop
-    (vfr4ogr/vfrogr.py:556-609) with columnar batches.
-    """
-
-    @F.pandas_udf(LongType())
-    def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = cell_encode(lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64), res)
-        return pd.Series(out)
-
-    return _enc
-
-
 @F.pandas_udf(LongType())
 def cell_mixed_res_udf(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
     """Mixed-resolution encode: each row carries its own resolution

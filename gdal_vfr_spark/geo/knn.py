@@ -805,7 +805,6 @@ class PartitionedLineRangeJoiner:
             )
         self.gres = gres
         maxd = self.max_dist
-        n = 1 << gres
 
         segs = targets_df.select(
             F.col(target_key).cast("long").alias("__key"),
@@ -827,26 +826,13 @@ class PartitionedLineRangeJoiner:
                         if len(line) < 2:
                             continue
                         for (ax, ay), (bx, by) in zip(line[:-1], line[1:]):
-                            ix0, iy0 = cells.lonlat_to_grid(
-                                np.asarray([min(ax, bx) - maxd]),
-                                np.asarray([min(ay, by) - maxd]),
+                            gc = cells.cover_bbox(
+                                min(ax, bx) - maxd,
+                                min(ay, by) - maxd,
+                                max(ax, bx) + maxd,
+                                max(ay, by) + maxd,
                                 gres,
                             )
-                            ix1, iy1 = cells.lonlat_to_grid(
-                                np.asarray([max(ax, bx) + maxd]),
-                                np.asarray([max(ay, by) + maxd]),
-                                gres,
-                            )
-                            xs = np.arange(int(ix0[0]), min(int(ix1[0]), n - 1) + 1)
-                            ys = np.arange(int(iy0[0]), min(int(iy1[0]), n - 1) + 1)
-                            gx, gy = np.meshgrid(xs, ys)
-                            gc = (
-                                cells.morton_encode(
-                                    gx.ravel().astype(np.int64),
-                                    gy.ravel().astype(np.int64),
-                                )
-                                << np.int64(5)
-                            ) | np.int64(gres)
                             for g in gc:
                                 grp_o.append(int(g))
                                 key_o.append(int(k))

@@ -155,28 +155,13 @@ class PackedPolygonIndex:
         send extra rows to the refine step, never skip it. Boundary
         cells keep the exact winding refine."""
         n = 1 << res
-        dx, dy = 360.0 / n, 180.0 / n
-        eps_x, eps_y = dx * 1e-9, dy * 1e-9
+        eps_x, eps_y = 360.0 / n * 1e-9, 180.0 / n * 1e-9
         cells_out, pidx_out, key_out, int_out = [], [], [], []
         for p in range(len(self.keys)):
-            lon_min, lat_min, lon_max, lat_max = self.bbox[p]
-            ix0, iy0 = cells.lonlat_to_grid(
-                np.asarray([lon_min]), np.asarray([lat_min]), res
-            )
-            ix1, iy1 = cells.lonlat_to_grid(
-                np.asarray([lon_max]), np.asarray([lat_max]), res
-            )
-            xs = np.arange(int(ix0[0]), min(int(ix1[0]), n - 1) + 1, dtype=np.int64)
-            ys = np.arange(int(iy0[0]), min(int(iy1[0]), n - 1) + 1, dtype=np.int64)
-            gx, gy = np.meshgrid(xs, ys)
-            gx, gy = gx.ravel(), gy.ravel()
-            cc = (
-                (cells.morton_encode(gx, gy) << np.int64(5)) | np.int64(res)
-            ).astype(np.int64)
-            cxmin = gx * dx - 180.0 - eps_x
-            cxmax = (gx + 1) * dx - 180.0 + eps_x
-            cymin = gy * dy - 90.0 - eps_y
-            cymax = (gy + 1) * dy - 90.0 + eps_y
+            cc = cells.cover_bbox(*self.bbox[p], res)
+            cxmin, cymin, cxmax, cymax = cells.cell_bounds(cc)
+            cxmin, cymin = cxmin - eps_x, cymin - eps_y
+            cxmax, cymax = cxmax + eps_x, cymax + eps_y
             ed = self._edges(p)
             touched = np.zeros(len(cc), dtype=bool)
             if len(ed):
@@ -210,8 +195,7 @@ class PackedPolygonIndex:
                             pos &= d > 0
                             neg &= d < 0
                     touched |= (bb & ~pos & ~neg).any(axis=1)
-            centers_x = gx * dx - 180.0 + dx / 2
-            centers_y = gy * dy - 90.0 + dy / 2
+            centers_x, centers_y = cells.cell_center(cc)
             interior = ~touched
             if interior.any():
                 inside = self.contains_one(p, centers_x[interior], centers_y[interior])
@@ -577,7 +561,6 @@ class PartitionedPIPJoiner:
         ).persist()
 
         def _groups(batches):
-            n = 1 << gres
             for pdf in batches:
                 grp_o: list[int] = []
                 salt_o: list[int] = []
@@ -586,18 +569,9 @@ class PartitionedPIPJoiner:
                 for k, buf in zip(pdf["__pkey"], pdf["__geom"]):
                     buf = bytes(buf)
                     allv = np.concatenate(wkb.decode_rings(buf))
-                    ix0, iy0 = cells.lonlat_to_grid(
-                        np.asarray([allv[:, 0].min()]), np.asarray([allv[:, 1].min()]), gres
+                    gc = cells.cover_bbox(
+                        allv[:, 0].min(), allv[:, 1].min(), allv[:, 0].max(), allv[:, 1].max(), gres
                     )
-                    ix1, iy1 = cells.lonlat_to_grid(
-                        np.asarray([allv[:, 0].max()]), np.asarray([allv[:, 1].max()]), gres
-                    )
-                    xs = np.arange(int(ix0[0]), min(int(ix1[0]), n - 1) + 1, dtype=np.int64)
-                    ys = np.arange(int(iy0[0]), min(int(iy1[0]), n - 1) + 1, dtype=np.int64)
-                    gx, gy = np.meshgrid(xs, ys)
-                    gc = (
-                        cells.morton_encode(gx.ravel(), gy.ravel()) << np.int64(5)
-                    ) | np.int64(gres)
                     for g in gc:
                         for s in range(nsalt):
                             grp_o.append(int(g))

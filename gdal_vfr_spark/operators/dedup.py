@@ -120,20 +120,16 @@ def word_shingle_hash_rows(
     path despite 6x fewer units. Tokenization is the tokens_expr
     contract: lower, split on [^a-z0-9]+, drop empties; docs shorter
     than n tokens contribute their full sequence; empty dropped."""
+    from gdal_vfr_spark.plans.skew import spread_small_input
+
     cols = ([id_col] if id_col else []) + [text_col]
-    src = df.select(*cols)
     # a corpus at scale arrives in thousands of parquet splits; a
     # bench-sized fixture arrives as ONE small file, which would
     # serialize the Arrow pass on a single python worker. Spreading a
     # tiny input is a trivial shuffle; at production partition counts
     # this branch never fires (so "the corpus never shuffles its text"
     # still holds where it matters).
-    # (streaming inputs skip the check: .rdd is undefined on a stream,
-    # and micro-batch partitioning is the trigger's concern)
-    if not src.isStreaming:
-        para = src.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < para:
-            src = src.repartition(para)
+    src = spread_small_input(df.select(*cols))
     if use_expr:
         out = src.select(
             *([id_col] if id_col else []),

@@ -3,14 +3,17 @@
 
 The reference applies daily VFR change files with delete-before-insert
 cursor loops inside one transaction (vfrogr.py:543-613). Here the whole
-change pass is ONE declarative merge: classify (left join) -> dedup
-current (window) -> anti-join deletes -> upsert. On Iceberg this maps
-1:1 to `MERGE INTO current USING changes ON key WHEN MATCHED AND
+change pass is ONE declarative merge: dedup current (window) -> classify
+(left join) -> anti-join deletes -> upsert. On Iceberg this maps 1:1 to
+`MERGE INTO current USING changes ON key WHEN MATCHED AND
 action='delete' THEN DELETE WHEN MATCHED THEN UPDATE SET * WHEN NOT
 MATCHED THEN INSERT *`; this sandbox has no Iceberg runtime, so
-ParquetTable implements the same semantics read-merge-overwrite with an
-atomic directory swap (same commit granularity the reference gets from
-its per-layer transaction, vfrogr.py:543-544,:611-613).
+ParquetTable implements the same semantics read-merge-overwrite: every
+commit is one atomic directory swap (same commit granularity the
+reference gets from its per-layer transaction, vfrogr.py:543-544,
+:611-613), and each merge rewrites the whole layer. A bucketed layout
+that rewrites only the touched buckets does not pay off here: a daily
+batch of ~1% of a layer touches every bucket, so nothing is pruned.
 """
 
 from __future__ import annotations
@@ -125,12 +128,18 @@ def classify_changes(
 
 
 def dedup_current(
-    current: DataFrame, key: str = "gml_id", order_col: str = "fid"
+    current: DataFrame, key: str = "gml_id", order_col: str | None = None
 ) -> DataFrame:
-    """J3 — duplicate natural keys in current state: keep the first FID,
-    drop the rest (vfrogr.py:817-829). Must run BEFORE merge or a true
-    MERGE raises on multiple matches (SURVEY.md §7.3)."""
-    w = Window.partitionBy(key).orderBy(F.col(order_col).asc())
+    """J3 — duplicate natural keys: keep one row per key, drop the rest
+    (vfrogr.py:817-829). Must run BEFORE merge or a true MERGE raises
+    on multiple matches (SURVEY.md §7.3).
+
+    The survivor is the row with the lowest xxhash64 of its whole
+    payload, so it depends on row content only, never on file or
+    partition order. order_col="fid" gives the reference's keep-first-
+    FID rule for tables that carry FIDs."""
+    order = F.col(order_col) if order_col else F.xxhash64(*[F.col(c) for c in current.columns])
+    w = Window.partitionBy(key).orderBy(order.asc())
     return (
         current.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
@@ -176,15 +185,13 @@ def apply_changes(
     the module docstring."""
     payload_cols = [c for c in changes.columns if c in current.columns]
     survivors = current.join(changes.select(key).distinct(), on=key, how="left_anti")
-    inserts = changes.where(F.col("action") != delete_action).select(*payload_cols)
     # a change batch may carry the same key more than once; the merged
     # state holds exactly one row per key (the reference applies them
     # sequentially so the last wins, vfrogr.py:556-580 — distributed
     # scans have no arrival order, so survivorship is deterministic on
     # a payload hash instead; documented deviation like FIDs §7.3)
-    w = Window.partitionBy(key).orderBy(F.xxhash64(*[F.col(c) for c in payload_cols]))
-    inserts = inserts.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop(
-        "__rn"
+    inserts = dedup_current(
+        changes.where(F.col("action") != delete_action).select(*payload_cols), key=key
     )
     missing = [c for c in current.columns if c not in payload_cols]
     for c in missing:
@@ -271,24 +278,33 @@ class ParquetTable:
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
 
-    def _commit(self, df: DataFrame) -> None:
-        staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(staging)
+    def _swap(self, src: str) -> None:
+        """Commit directory src as the table: move the current snapshot
+        aside, rename src in, delete the old snapshot."""
         old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
+        if self.exists():
             os.rename(self.path, old)
-        os.rename(staging, self.path)
+        os.rename(src, self.path)
         if os.path.exists(old):
             shutil.rmtree(old)
 
-    def write(self, df: DataFrame, overwrite: bool = False) -> None:
-        """M2 — create-or-replace. Without overwrite, an existing table
-        raises (the reference's 'already exists... use --overwrite or
-        --append' skip, vfrogr.py:474-476)."""
+    def _commit(self, df: DataFrame) -> None:
+        staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
+        df.write.mode("overwrite").parquet(staging)
+        self._swap(staging)
+
+    def _check_replace(self, overwrite: bool) -> None:
+        """M2 — without overwrite, an existing table raises (the
+        reference's 'already exists... use --overwrite or --append'
+        skip, vfrogr.py:474-476)."""
         if self.exists() and not overwrite:
             raise FileExistsError(
-                f"{self.path} already exists; use overwrite=True or append()"
+                f"{self.path} already exists; use overwrite=True or append"
             )
+
+    def write(self, df: DataFrame, overwrite: bool = False) -> None:
+        """M2 — create-or-replace."""
+        self._check_replace(overwrite)
         self._commit(df)
 
     def adopt_dir(self, src: str, overwrite: bool = False) -> None:
@@ -296,16 +312,8 @@ class ParquetTable:
         snapshot by rename — zero re-read. This is the commit half of
         the driver's single-pass partitionBy fan-out (one scan writes
         every layer; each partition directory is adopted per-table)."""
-        if self.exists() and not overwrite:
-            raise FileExistsError(
-                f"{self.path} already exists; use overwrite=True or append_dir()"
-            )
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(src, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        self._check_replace(overwrite)
+        self._swap(src)
 
     def append_dir(self, src: str) -> None:
         """Directory-append: move the new data files into the table
@@ -315,7 +323,7 @@ class ParquetTable:
         file names are task-unique already; a batch tag prefix makes
         repeated appends of the same staging layout collision-proof."""
         if not self.exists():
-            os.rename(src, self.path)
+            self._swap(src)
             return
         tag = uuid.uuid4().hex[:8]
         for fn in os.listdir(src):
@@ -355,128 +363,21 @@ class ParquetTable:
         self._commit(df.repartition(target_files))
         return target_files
 
-    def merge(self, changes: DataFrame, key: str = "gml_id") -> DataFrame:
-        """M3 — full change pass: classify -> dedup -> apply -> commit.
-        Returns the change tally (A3) so callers can log it like the
-        reference's summary (vfrogr.py:617-627). O(table) per batch —
-        the uniform-commit stand-in; BucketedParquetTable below is the
-        O(delta) layout."""
-        if not self.exists():
-            classified = changes.withColumn("action", F.lit("add"))
-            merged = apply_changes(
-                self.spark.createDataFrame([], changes.drop("action").schema),
-                classified,
-                key=key,
-            )
+    def merge(self, changes: DataFrame, key: str = "gml_id") -> dict:
+        """M3 — full change pass: dedup -> classify -> apply -> commit.
+        Returns the change tally {action: n} (A3) so callers can log it
+        like the reference's summary (vfrogr.py:617-627). A missing
+        table merges as an empty one, so every change is an add.
+        O(table) per batch."""
+        if self.exists():
+            current = self.read()
         else:
-            current = dedup_current(self.read(), key=key, order_col=key)
-            classified = classify_changes(changes, current, key=key)
-            merged = apply_changes(current, classified, key=key)
-        tally = classified.groupBy("action").agg(F.count("*").alias("n"))
-        tally_rows = tally.collect()
-        self._commit(merged)
-        return self.spark.createDataFrame(tally_rows, tally.schema)
-
-
-class BucketedParquetTable:
-    """Partition-pruned merge: the O(delta), not O(table), change pass.
-
-    Layout: parquet partitioned by `__bucket = pmod(xxhash64(key), n)`.
-    merge() computes the distinct buckets the change batch touches
-    (collects at most n_buckets small ints), reads ONLY those partitions
-    (static partition pruning — PartitionFilters on the scan, asserted
-    in tests/test_merge.py), runs the same classify -> dedup -> apply
-    pass as ParquetTable.merge, and swaps only the touched bucket
-    directories. Untouched partitions' data files are never read OR
-    rewritten. Cost per batch: O(|changes| + |table| * touched/n),
-    which is what Iceberg's MERGE INTO with bucket(n, key) partitioning
-    gives you on a real cluster — this class models that cost in the
-    sandbox; the commit differs (per-directory renames instead of one
-    atomic snapshot pointer flip, so a crash mid-merge can expose a
-    partially-merged table across buckets — Iceberg's metadata commit
-    is the production answer, vfrogr.py:543-544's per-layer transaction
-    the reference's)."""
-
-    def __init__(self, spark, path: str, key: str = "gml_id", n_buckets: int = 16):
-        self.spark = spark
-        self.path = path
-        self.key = key
-        self.n_buckets = n_buckets
-
-    def _bucket(self):
-        return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets))
-
-    def exists(self) -> bool:
-        return os.path.exists(self.path)
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path).drop("__bucket")
-
-    def write(self, df: DataFrame, overwrite: bool = False) -> None:
-        if self.exists() and not overwrite:
-            raise FileExistsError(f"{self.path} already exists; use overwrite=True")
-        staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
-        df.withColumn("__bucket", self._bucket()).write.mode("overwrite").partitionBy(
-            "__bucket"
-        ).parquet(staging)
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(staging, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-    def merge(self, changes: DataFrame, key: str | None = None) -> DataFrame:
-        key = key or self.key
-        if key != self.key:
-            raise ValueError(
-                f"table is bucketed by {self.key!r}; cannot merge on {key!r}"
-            )
-        if not self.exists():
-            classified = changes.withColumn("action", F.lit("add"))
-            merged = apply_changes(
-                self.spark.createDataFrame([], changes.drop("action").schema),
-                classified,
-                key=key,
-            )
-            tally = classified.groupBy("action").agg(F.count("*").alias("n"))
-            tally_rows = tally.collect()
-            self.write(merged)
-            return self.spark.createDataFrame(tally_rows, tally.schema)
-        buckets = sorted(
-            r["b"]
-            for r in changes.select(self._bucket().alias("b")).distinct().collect()
-        )
-        if not buckets:
-            empty = self.spark.createDataFrame([], "action string, n long")
-            return empty
-        # keys hash to exactly one bucket, so classification against the
-        # touched-bucket slice equals classification against the full
-        # table — rows elsewhere cannot share a key with any change
-        cur = (
-            self.spark.read.parquet(self.path)
-            .where(F.col("__bucket").isin([int(b) for b in buckets]))
-            .drop("__bucket")
-        )
-        current = dedup_current(cur, key=key, order_col=key)
+            current = self.spark.createDataFrame([], changes.drop("action").schema)
+        current = dedup_current(current, key=key)
         classified = classify_changes(changes, current, key=key)
-        merged = apply_changes(current, classified, key=key)
-        tally = classified.groupBy("action").agg(F.count("*").alias("n"))
-        tally_rows = tally.collect()
-        staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
-        merged.withColumn("__bucket", self._bucket()).write.mode(
-            "overwrite"
-        ).partitionBy("__bucket").parquet(staging)
-        tag = uuid.uuid4().hex[:8]
-        for b in buckets:
-            src = os.path.join(staging, f"__bucket={int(b)}")
-            dst = os.path.join(self.path, f"__bucket={int(b)}")
-            old = f"{dst}.__old_{tag}"
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            if os.path.exists(src):
-                os.rename(src, dst)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-        shutil.rmtree(staging, ignore_errors=True)
-        return self.spark.createDataFrame(tally_rows, tally.schema)
+        tally = {
+            r["action"]: r["n"]
+            for r in classified.groupBy("action").agg(F.count("*").alias("n")).collect()
+        }
+        self._commit(apply_changes(current, classified, key=key))
+        return tally

@@ -68,12 +68,6 @@ def geometry_coalesce(
     return out
 
 
-def drop_null_geometry(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
-    """P3 — `-g/--nogeomskip` (vfrogr.py:592-598). Count what you drop
-    with operators.counts.null_geometry_tally before applying."""
-    return df.where(F.col(geom_col).isNotNull())
-
-
 def stringify_lists_for_export(df: DataFrame, sep: str = ",") -> DataFrame:
     """P5 — Shapefile sinks can't carry list fields; the reference
     downgrades them to strings (vfrogr.py:723-729). Arrays -> joined

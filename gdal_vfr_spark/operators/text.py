@@ -538,14 +538,10 @@ def _repetition_stats_arrow(
         f" distinct_words long, top{top_n}_chars long,"
         f" dup{dup_n}_chars long, keep_repetition int"
     )
-    src = df.select(id_col, text_col)
+    from gdal_vfr_spark.plans.skew import spread_small_input
+
     # small inputs arrive as 1-2 parquet splits; spread the map work
-    # (same trigger as word_shingle_hash_rows — at production partition
-    # counts this branch never fires)
-    if not src.isStreaming:
-        para = src.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < para:
-            src = src.repartition(para)
+    src = spread_small_input(df.select(id_col, text_col))
     tok_re = _re.compile(r"[^a-z0-9]+")
 
     def _stats(batches):

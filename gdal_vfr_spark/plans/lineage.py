@@ -48,6 +48,12 @@ def content_hash_expr(df: DataFrame) -> F.Column:
     return F.bit_xor(row_hash)
 
 
+def _count_and_hash(df: DataFrame) -> tuple[int, int]:
+    """(row count, content hash) of df from ONE aggregate — one read."""
+    r = df.agg(F.count(F.lit(1)).alias("n"), content_hash_expr(df).alias("h")).first()
+    return r["n"], r["h"] or 0
+
+
 @dataclass
 class LineageLog:
     spark: object
@@ -77,11 +83,7 @@ class LineageLog:
             [(stage, int(unit), int(n_rows), int(content_hash), float(elapsed))],
             LINEAGE_SCHEMA[:5],
         ).withColumn("committed_at", F.current_timestamp())
-        t = self._table()
-        if t.exists():
-            t.append(row)
-        else:
-            t.write(row)
+        self._table().append(row)
 
 
 def run_stage_resumable(
@@ -124,21 +126,24 @@ def run_stage_resumable(
         # stage_input_path but different pages / prefix_res / tile_res
         # would otherwise silently read the stale layout and produce
         # wrong per-unit output. The fingerprint covers the staging
-        # parameters, the keyed schema, and the input row count; any
-        # mismatch re-stages with mode=overwrite. The count is one
-        # narrow scan of the input per call — the price of detecting a
-        # changed input behind an unchanged path. (The existence checks
+        # parameters, the keyed schema, and the input's row count and
+        # content hash; any mismatch re-stages with mode=overwrite. The
+        # count and hash are one scan of the input per call — the price
+        # of detecting a changed input behind an unchanged path, even
+        # one with the same row count. (The existence checks
         # are local-filesystem only; for HDFS/S3 staging, front this
         # with the Hadoop FileSystem API or a catalog table.)
         import json
         import os
 
+        n_rows, content_hash = _count_and_hash(pages)
         fp = json.dumps(
             {
                 "prefix_res": prefix_res,
                 "tile_res": tile_res,
                 "schema": keyed.schema.simpleString(),
-                "n_rows": pages.count(),
+                "n_rows": n_rows,
+                "content_hash": content_hash,
             },
             sort_keys=True,
         )
@@ -163,9 +168,7 @@ def run_stage_resumable(
         part = keyed.where(F.col("unit") == unit)
         out = transform(part)
         out.write.mode("overwrite").parquet(f"{out_path}/unit={unit}")
-        back = spark.read.parquet(f"{out_path}/unit={unit}")
-        n = back.count()
-        h = back.agg(content_hash_expr(back).alias("h")).first()["h"] or 0
+        n, h = _count_and_hash(spark.read.parquet(f"{out_path}/unit={unit}"))
         lineage.commit(stage, unit, n, h, time.time() - t0)
         done.append(unit)
     return done

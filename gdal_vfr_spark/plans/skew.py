@@ -81,13 +81,13 @@ def spread_small_input(df: DataFrame, min_bytes: int | None = None) -> DataFrame
     are single-row-group parquet files, so EVERY map-side pass over
     them — Arrow UDF batches included — otherwise runs on one core).
 
-    Trigger matches word_shingle_hash_rows' precedent: only when the
-    current partition count is below defaultParallelism, so at
-    production partition counts (thousands of splits) this is a no-op
-    and costs nothing. Streaming inputs are left untouched (.rdd is
-    undefined on a stream). Spreading is a plain repartition —
-    deterministic results for every engine operator by the
-    partitioning-invariance discipline (pinned across the test suite).
+    Trigger: only when the current partition count is below
+    defaultParallelism, so at production partition counts (thousands
+    of splits) this is a no-op and costs nothing. Streaming inputs are
+    left untouched (.rdd is undefined on a stream). Spreading is a
+    plain repartition — deterministic results for every engine operator
+    by the partitioning-invariance discipline (pinned across the test
+    suite).
     """
     if df.isStreaming:
         return df

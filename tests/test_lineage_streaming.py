@@ -177,6 +177,19 @@ def test_lineage_staged_fingerprint_restages(spark, tmp_path):
         prefix_res=6, stage_input_path=str(staged),
     )
     assert (staged / "_SUCCESS").stat().st_mtime != mtime2
+    # same row count, changed content behind the same path -> re-staged,
+    # and the units read the new content
+    mtime3 = (staged / "_SUCCESS").stat().st_mtime
+    pages3 = pages2.withColumn("url", F.concat("url", F.lit("#v2")))
+    log_e = LineageLog(spark, str(tmp_path / "lin_e"))
+    run_stage_resumable(
+        spark, pages3, "x", transform, log_e, str(tmp_path / "out_e"),
+        prefix_res=6, stage_input_path=str(staged),
+    )
+    assert (staged / "_SUCCESS").stat().st_mtime != mtime3
+    urls = spark.read.parquet(str(tmp_path / "out_e/unit=*")).select("url")
+    assert urls.count() == pages2.count()
+    assert urls.where(~F.col("url").endswith("#v2")).count() == 0
 
 
 def test_hot_keys_and_salted_join(spark):

@@ -54,22 +54,19 @@ def test_change_merge_add_then_idempotent_update(spark, tmp_path):
     n = state.count()
 
     changes = datagen.gen_changes(spark, n_add=20, n_update=30)
-    tally1 = {r["action"]: r["n"] for r in t.merge(changes, key="gml_id").collect()}
-    assert tally1 == {"add": 20, "update": 30}
+    assert t.merge(changes, key="gml_id") == {"add": 20, "update": 30}
     assert t.read().count() == n + 20
     # updated rows carry new payload
     assert t.read().where(F.col("nazev").endswith("v2")).count() == 30
 
-    tally2 = {r["action"]: r["n"] for r in t.merge(changes, key="gml_id").collect()}
-    assert tally2 == {"update": 50}
+    assert t.merge(changes, key="gml_id") == {"update": 50}
     assert t.read().count() == n + 20
 
 
 def test_merge_into_empty_is_all_adds(spark, tmp_path):
     t = M.ParquetTable(spark, str(tmp_path / "fresh"))
     changes = datagen.gen_changes(spark, n_add=5, n_update=0)
-    tally = {r["action"]: r["n"] for r in t.merge(changes).collect()}
-    assert tally == {"add": 5}
+    assert t.merge(changes) == {"add": 5}
     assert t.read().count() == 5
 
 
@@ -81,7 +78,7 @@ def test_dedup_current_keeps_first_fid(spark):
             "nazev": ["dup-late", "dup-early", "x"],
         }
     )
-    out = M.dedup_current(spark.createDataFrame(pdf)).orderBy("gml_id").collect()
+    out = M.dedup_current(spark.createDataFrame(pdf), order_col="fid").orderBy("gml_id").collect()
     assert [(r["gml_id"], r["fid"]) for r in out] == [("OB.1", 3), ("OB.2", 9)]
 
 
@@ -161,69 +158,25 @@ def test_symmetric_diff(spark):
     assert out == [("+", "x"), ("+", "z"), ("-", "w")]
 
 
-def test_bucketed_merge_prunes_and_matches_full_merge(spark, tmp_path):
-    """BucketedParquetTable.merge must (a) produce exactly the state and
-    tally ParquetTable.merge does, (b) leave untouched buckets' data
-    files bit-untouched on disk (O(delta) rewrite), and (c) read only
-    the touched partitions (PartitionFilters on the pruned scan)."""
-    import os
-
-    state = obce_state(spark)
-    changes = datagen.gen_changes(spark, n_add=20, n_update=30)
-
-    full = M.ParquetTable(spark, str(tmp_path / "full"))
-    full.write(state)
-    want_tally = {r["action"]: r["n"] for r in full.merge(changes, key="gml_id").collect()}
-    want = sorted(map(tuple, full.read().collect()))
-
-    bt = M.BucketedParquetTable(spark, str(tmp_path / "bucketed"), key="gml_id", n_buckets=64)
-    bt.write(state)
-
-    def snapshot(root):
-        files = {}
-        for dirpath, _, fns in os.walk(root):
-            for fn in fns:
-                if fn.startswith(("_", ".")):
-                    continue
-                p = os.path.join(dirpath, fn)
-                st = os.stat(p)
-                files[os.path.relpath(p, root)] = (st.st_mtime_ns, st.st_size, st.st_ino)
-        return files
-
-    before = snapshot(bt.path)
-    touched = {
-        int(r["b"])
-        for r in changes.select(bt._bucket().alias("b")).distinct().collect()
-    }
-    assert 0 < len(touched) < 64  # the fixture must leave some buckets untouched
-    got_tally = {r["action"]: r["n"] for r in bt.merge(changes).collect()}
-    assert got_tally == want_tally
-    assert sorted(map(tuple, bt.read().collect())) == want
-
-    after = snapshot(bt.path)
-    for rel, meta in before.items():
-        b = int(rel.split("=")[1].split("/")[0])
-        if b not in touched:
-            assert after.get(rel) == meta, f"untouched bucket file rewritten: {rel}"
-    for rel in after:
-        b = int(rel.split("=")[1].split("/")[0])
-        if b not in touched:
-            assert rel in before, f"file appeared in untouched bucket: {rel}"
-
-    # the pruned read is PARTITION-pruned, not post-filtered
-    plan = (
-        spark.read.parquet(bt.path)
-        .where(F.col("__bucket").isin(sorted(touched)))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan and "__bucket" in plan
-
-    # idempotence parity with the full-table path
-    t2 = {r["action"]: r["n"] for r in bt.merge(changes).collect()}
-    assert t2 == {"update": 50}
-    assert sorted(map(tuple, bt.read().collect())) == want
+def test_merge_survivor_independent_of_file_order(spark, tmp_path):
+    """A table holding duplicate keys with different payloads (an
+    overlapping append) keeps the same survivor per key whatever order
+    its files are in: merging one batch into two tables that hold the
+    same rows in opposite file order leaves identical tables."""
+    changes = datagen.gen_changes(spark, n_add=5, n_update=5)
+    first = obce_state(spark)
+    later = first.withColumn("nazev", F.regexp_replace("nazev", "Obec", "OBEC"))
+    n = first.count()
+    states = []
+    for name, (a, b) in (("ab", (first, later)), ("ba", (later, first))):
+        t = M.ParquetTable(spark, str(tmp_path / name))
+        t.write(a.coalesce(1))
+        t.append(b.coalesce(1))
+        assert t.read().count() == 2 * n
+        assert t.merge(changes) == {"add": 5, "update": 5}
+        states.append(sorted(map(tuple, t.read().collect())))
+    assert len(states[0]) == n + 5
+    assert states[0] == states[1]
 
 
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
